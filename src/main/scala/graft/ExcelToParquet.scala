@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Conversion entry point + CLI — the Spark equivalent of the reference's
@@ -42,7 +44,11 @@ object ExcelToParquet {
     r.option("skipRows", opts.skipRows).load(opts.input)
   }
 
-  /** Convert workbook sheet(s) to a zstd parquet file; returns row count.
+  /** Convert workbook sheet(s) to a zstd parquet file; returns the number
+    * of rows committed to `opts.output`: the sum of the record counts in
+    * the footers of its committed part files, read on the driver. There
+    * is no read-back job, so a conversion with `writePartitions = 1` runs
+    * exactly one Spark job.
     * A plain file keeps the reference's extension contract (exit-1 on
     * anything but .xlsx/.xlsb); a directory or glob converts every matched
     * workbook in one N-task job (the source plans one partition per file),
@@ -61,7 +67,26 @@ object ExcelToParquet {
       val w = df.write.mode("overwrite").option("compression", "zstd")
       withGroupGeometry(w, opts).parquet(opts.output)
     }
-    spark.read.parquet(opts.output).count()
+    committedRows(spark, opts.output)
+  }
+
+  /** Rows in the part files of a committed parquet directory, from their
+    * footers. Names starting with `_` or `.` (`_SUCCESS`, checksums) are
+    * skipped, as Spark's file index skips them.
+    */
+  private def committedRows(spark: SparkSession, dir: String): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   /** R8: one write batch = one row group. DataFrameWriter options reach
@@ -105,7 +130,9 @@ object ExcelToParquet {
     * own Spark job (the per-sheet scan is one task), so driver-side
     * concurrency is what fills the cluster: jobs are submitted from a
     * bounded pool and Spark's scheduler interleaves their tasks across
-    * executors. Returns (input, rowCount-or-error) per file.
+    * executors. Returns (input, rowCount-or-error) per file; the error is
+    * the exception's class name and message. Fatal errors and interrupts
+    * are not captured: they fail the whole call.
     */
   def convertMany(
       spark: SparkSession,
@@ -121,7 +148,7 @@ object ExcelToParquet {
       val futures = jobs.map { opts =>
         Future {
           opts.input -> (try Right(convert(spark, opts))
-          catch { case e: Throwable => Left(e.getMessage) })
+          catch { case NonFatal(e) => Left(e.toString) })
         }
       }
       Await.result(Future.sequence(futures), Duration.Inf)
@@ -135,7 +162,9 @@ object ExcelToParquet {
     * same job after a partial failure (or on a grown input directory)
     * converts only new/changed workbooks. The manifest is itself a tiny
     * parquet table (one row per input file — file-count scale, not data
-    * scale), readable as a conversion audit log.
+    * scale), readable as a conversion audit log. It is replaced by
+    * renames only, so a crash at any step leaves either the manifest or a
+    * committed copy that the next run moves into place.
     *
     * Returns (results for converted inputs, skipped input paths).
     */
@@ -148,6 +177,17 @@ object ExcelToParquet {
     val conf = spark.sessionState.newHadoopConf()
     val mPath = new Path(manifestPath)
     val mFs = mPath.getFileSystem(conf)
+    val tmp = new Path(manifestPath + ".graft-tmp")
+    val old = new Path(manifestPath + ".graft-old")
+    def move(from: Path, to: Path): Unit =
+      if (!mFs.rename(from, to))
+        throw new java.io.IOException(s"could not move $from to $to")
+
+    // Finish a swap (below) that a crash interrupted: with the manifest
+    // set aside, the committed tmp is the newest manifest.
+    if (!mFs.exists(mPath) && mFs.exists(new Path(tmp, "_SUCCESS")))
+      move(tmp, mPath)
+    mFs.delete(old, true)
 
     val prior: Map[String, (Long, Long, Long)] =
       if (mFs.exists(mPath))
@@ -183,14 +223,16 @@ object ExcelToParquet {
       converted.flatMap { case (in, rows) =>
         sigs(in).map { case (len, mt) => in -> ((len, mt, rows)) }
       }
+    // Swap by renames, so a crash at any step leaves either the manifest
+    // or a committed tmp for the recovery above; the old copy is deleted
+    // only once it is out of the way.
     import spark.implicits._
-    val tmp = manifestPath + ".graft-tmp"
     manifest.toSeq.map { case (in, (len, mt, rows)) => (in, len, mt, rows) }
       .toDF("input", "length", "mtime", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    mFs.delete(mPath, true)
-    if (!mFs.rename(new Path(tmp), mPath))
-      throw new java.io.IOException(s"could not move manifest into place at $manifestPath")
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    if (mFs.exists(mPath)) move(mPath, old)
+    move(tmp, mPath)
+    mFs.delete(old, true)
     (results, skip.map(_.input))
   }
 

@@ -28,12 +28,17 @@ class ConvertManySpec extends AnyFunSuite {
       ExcelToParquet.Options(in, dir.resolve(s"out$i.parquet").toString)
     } :+ ExcelToParquet.Options(dir.resolve("missing.xlsx").toString,
       dir.resolve("outX.parquet").toString)
+    val empty = Files.createFile(dir.resolve("empty.xlsx")).toString
+    val allJobs = jobs :+ ExcelToParquet.Options(empty, dir.resolve("outE.parquet").toString)
 
-    val results = ExcelToParquet.convertMany(spark, jobs, parallelism = 4).toMap
+    val results = ExcelToParquet.convertMany(spark, allJobs, parallelism = 4).toMap
     (1 to 4).foreach { i =>
       assert(results(jobs(i - 1).input) == Right(i * 10L))
     }
     assert(results(jobs(4).input).isLeft) // missing file -> error, not crash
+    // a zero-byte workbook -> an error naming the exception class
+    val err = results(empty).swap.toOption
+    assert(err.exists(e => e != null && e.matches("""(?s)[\w.$]+(: .*)?""")), err)
   }
 
   test("convertManyIncremental skips unchanged inputs and re-runs changed ones") {
@@ -76,5 +81,29 @@ class ConvertManySpec extends AnyFunSuite {
     val (r4, s4) = ExcelToParquet.convertManyIncremental(spark, jobs :+ job4, manifest, 2)
     assert(r4.toMap == Map(in4 -> Right(2L)))
     assert(s4.size == 3)
+  }
+
+  test("convertManyIncremental finishes a manifest swap a crash interrupted") {
+    val dir = Files.createTempDirectory("incr_crash")
+    val jobs = (1 to 2).map { i =>
+      val in = dir.resolve(s"f$i.xlsx").toString
+      XlsxWriter.write(in, Seq(Sheet.dense("s",
+        Seq(Some(XShared("id"))) +: (1 to i).map(k => Seq(Some(XNum(k)))))))
+      ExcelToParquet.Options(in, dir.resolve(s"out$i.parquet").toString)
+    }
+    val manifest = dir.resolve("manifest.parquet")
+    val (r1, _) = ExcelToParquet.convertManyIncremental(spark, jobs, manifest.toString, 2)
+    assert(r1.size == 2)
+
+    // the state a crash between setting the manifest aside and moving the
+    // committed tmp into place leaves: no manifest, a committed tmp
+    val tmp = dir.resolve("manifest.parquet.graft-tmp")
+    Files.move(manifest, tmp)
+    assert(Files.exists(tmp.resolve("_SUCCESS")))
+
+    val (r2, s2) = ExcelToParquet.convertManyIncremental(spark, jobs, manifest.toString, 2)
+    assert(r2.isEmpty)
+    assert(s2.toSet == jobs.map(_.input).toSet)
+    assert(Files.exists(manifest.resolve("_SUCCESS")) && !Files.exists(tmp))
   }
 }
